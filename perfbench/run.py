@@ -41,7 +41,7 @@ import datagen  # noqa: E402
 import sparkproc  # noqa: E402
 import spec  # noqa: E402
 from checks import CheckLog  # noqa: E402
-from spans import RssSampler, Tracer, process_age_s, tree_cpu_s  # noqa: E402
+from spans import RssSampler, Tracer, host_cpu_ticks, process_age_s, tree_cpu_s  # noqa: E402
 from workloads import WORKLOADS, Context  # noqa: E402
 
 
@@ -252,47 +252,58 @@ def main() -> int:
         ctx = Context(spark, data_dir, work, tracer, log, sizes)
         os.makedirs(work, exist_ok=True)
         workload = WORKLOADS[args.workload]()
+        sparkproc.warm(spark, workload.python_workers)
         workload.setup(ctx)
         setup_s = process_age_s() - datagen_s
         if args.trace:
             install_wrappers(tracer)
         rng = np.random.default_rng(args.seed)
-        min_settled = spec.MIN_SETTLED_TRACED if args.trace else spec.MIN_SETTLED
+        warmup = 0 if args.smoke else spec.WARMUP[args.workload]
+        min_settled = 2 * spec.MIN_SETTLED_TRACED if args.trace else spec.MIN_SETTLED[args.workload]
         if args.smoke:
             min_settled = 2 if args.trace else 1
 
         with RssSampler() as rss:
             phases["setup"] = setup_s
+            steal0 = host_cpu_ticks()
             t2 = time.perf_counter()
             cold = run_pass(ctx, workload, rng, check=False)
             t3 = time.perf_counter()
             run_pass(ctx, workload, rng, check=True)
+            t4 = time.perf_counter()
+            for _ in range(warmup):
+                run_pass(ctx, workload, rng, check=False)
             settled, start = [], time.perf_counter()
-            phases.update(cold=t3 - t2, check=start - t3)
+            phases.update(cold=t3 - t2, check=t4 - t3, warmup=start - t4)
             while len(settled) < min_settled or time.perf_counter() - start < args.seconds:
                 tracer.enabled = bool(args.trace) and len(settled) % 2 == 0
                 settled.append(run_pass(ctx, workload, rng, check=False))
             phases["settled"] = time.perf_counter() - start
+            steal = [b - a for a, b in zip(steal0, host_cpu_ticks())]
             burst = None
             if args.trace:
                 tracer.enabled = False
                 burst = run_pass(ctx, workload, rng, False, workload.burst(ctx, rng))
                 phases["burst"] = time.perf_counter() - start - phases["settled"]
     finally:
-        t4 = time.perf_counter()
+        t5 = time.perf_counter()
         sparkproc.stop(spark)
         shutil.rmtree(work, ignore_errors=True)
-        phases["stop"] = time.perf_counter() - t4
+        phases["stop"] = time.perf_counter() - t5
 
     attempted, failed = log.attempted, log.failed
     for why in log.reasons[:20]:
         print(f"CHECK FAILED: {why}")
     print(f"workload {args.workload} seed {args.seed}: {len(settled)} settled passes "
-          f"(passes 3..{len(settled) + 2}), {attempted} operations, {failed} failed")
+          f"(passes {warmup + 3}..{len(settled) + warmup + 2}), {attempted} operations, {failed} failed")
     print(f"bench.datagen_s = {datagen_s:.4f} s  (data-generation cache miss, not in setup_s)")
     print("phase wall times, s: " + " ".join(f"{k}={v:.2f}" for k, v in phases.items()))
+    print(f"host steal during the passes: {100 * steal[0] / max(steal[1], 1):.1f}% of the "
+          "box's CPU time (wall times stretch with it; compare runs with similar steal)")
     sizing = {**spec.SESSION, **data}
     print(f"session sizing: {json.dumps(sizing)}")
+    print("peak_rss_mb by process: " + " ".join(
+        f"{k}={v:.0f}" for k, v in sorted(rss.peak_split.items())))
 
     if args.trace:
         gauges = {"session.start_s": session_s, **ctx.gauges}

@@ -211,36 +211,46 @@ def tree_cpu_s(root: int | None = None) -> float:
     return total / _TICK
 
 
-def tree_pss_mb(root: int | None = None) -> float:
-    """Proportional set size of the process tree: resident pages, with
-    each page shared between processes (forked Python workers) split
-    among them, so the sum counts every page once."""
-    total_kb = 0
+def tree_pss_mb(root: int | None = None) -> dict[str, float]:
+    """Proportional set size of the process tree by process name:
+    resident pages, with each page shared between processes (forked
+    Python workers) split among them, so the sum counts every page
+    once."""
+    out: dict[str, float] = {}
     for pid in _tree_pids(root or os.getpid()):
         try:
+            with open(f"/proc/{pid}/comm") as fh:
+                name = fh.read().strip()
             with open(f"/proc/{pid}/smaps_rollup") as fh:
                 for line in fh:
                     if line.startswith("Pss:"):
-                        total_kb += int(line.split()[1])
+                        out[name] = out.get(name, 0.0) + int(line.split()[1]) / 1024
                         break
         except OSError:
             continue
-    return total_kb / 1024
+    return out
 
 
 class RssSampler:
     """Background sampler of the process tree's resident memory (as
-    PSS); the peak of the sum, not the sum of per-process peaks."""
+    PSS); the peak of the sum, not the sum of per-process peaks, and
+    how that peak split by process name."""
 
-    def __init__(self, interval: float = 0.25):
+    def __init__(self, interval: float = 0.5):
         self.interval = interval
         self.peak_mb = 0.0
+        self.peak_split: dict[str, float] = {}
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
+    def _sample(self):
+        split = tree_pss_mb()
+        if sum(split.values()) > self.peak_mb:
+            self.peak_mb, self.peak_split = sum(split.values()), split
+
     def _run(self):
         while not self._stop.is_set():
-            self.peak_mb = max(self.peak_mb, tree_pss_mb())
+            self._sample()
             self._stop.wait(self.interval)
 
     def __enter__(self):
@@ -250,7 +260,16 @@ class RssSampler:
     def __exit__(self, *exc):
         self._stop.set()
         self._thread.join()
-        self.peak_mb = max(self.peak_mb, tree_pss_mb())
+        self._sample()
+
+
+def host_cpu_ticks() -> tuple[int, int]:
+    """(steal, total) CPU ticks of the whole box since boot: the time
+    the hypervisor ran something else on this VM's CPUs, which no
+    process here is charged for but which stretches every wall time."""
+    with open("/proc/stat") as fh:
+        f = [int(x) for x in fh.readline().split()[1:]]
+    return f[7], sum(f[:8])
 
 
 def process_age_s() -> float:

@@ -81,6 +81,7 @@ def _noop(df) -> None:
 class Workload:
     name = ""
     shuffle = False  # whether the seed reorders a pass's operations
+    python_workers = False  # whether it runs Python code on the executors
 
     def setup(self, ctx: Context) -> None:
         pass
@@ -156,6 +157,7 @@ class CurationStore(Workload):
     the same state."""
 
     name = "curation_store"
+    python_workers = True  # curate_corpus canonicalizes text in mapInArrow
     TOP = "user_profile"
     TAIL_SCHEMA = "event_id long, user_id long, value double"
     TABLES = ("packs", "tail", "user_events", "user_profile")
